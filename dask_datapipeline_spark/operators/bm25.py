@@ -9,7 +9,7 @@ scoring tail: ``bm25_topk`` scans the corpus (the one-shot probe
 shape) and ``bm25_topk_from_index`` probes the materialized
 ``build_bm25_index`` postings (the repeated-query shape; maintained
 incrementally by ``streaming/windows.py::stream_incremental_bm25_index``
-and folded by ``compact_bm25_index``).
+and folded in place by ``maybe_compact_bm25_index``).
 
     score(D, Q) = Σ_{t in Q} idf(t) · tf(t,D)·(k1+1)
                                / (tf(t,D) + k1·(1 - b + b·|D|/avgdl))
@@ -55,7 +55,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dask_datapipeline_spark.indexfs import IndexFS
+from dask_datapipeline_spark.operators.deltas import (
+    DeltaLog,
+    compact_log,
+    recover_log,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -160,13 +164,20 @@ def build_bm25_index(docs: DataFrame, index_dir: str) -> None:
     (``bucketBy(token)``) for static pruning; plain clustered parquet
     keeps this self-contained."""
     postings, stats = postings_frames(docs)
+    _write_postings(postings, index_dir.rstrip("/") + "/postings")
+    stats.write.mode("overwrite").parquet(index_dir.rstrip("/") + "/stats")
+
+
+def _write_postings(postings: DataFrame, path: str) -> None:
+    """Write postings clustered on token — every writer of an index
+    snapshot or delta goes through here, so all deltas share the
+    layout row-group pruning relies on."""
     (
         postings.repartition("token")
         .sortWithinPartitions("token", "doc_id")
         .write.mode("overwrite")
-        .parquet(index_dir.rstrip("/") + "/postings")
+        .parquet(path)
     )
-    stats.write.mode("overwrite").parquet(index_dir.rstrip("/") + "/stats")
 
 
 def postings_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -191,53 +202,6 @@ def postings_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.sum(F.size(F.split(F.col("text"), " "))).cast("long").alias("sum_dl"),
     )
     return postings, stats
-
-
-def compact_bm25_index(spark, index_dir: str, out_dir: str) -> None:
-    """Fold a delta-built index (``stream_incremental_bm25_index``)
-    into the one-shot layout: postings deltas union → re-cluster on
-    token → single postings dir; stats deltas SUM → one row. Scoring
-    from the compacted index is bit-identical (postings are disjoint
-    across deltas, so the union is a repartition, not a merge; stats
-    addition is exact integers). Run it when delta count starts to
-    hurt probe latency (many small files ÷ row-group pruning) — the
-    classic log-structured compaction, kept OUT of the query path.
-    Writes to ``out_dir`` (building a compacted copy next to the live
-    index, then switching readers, is the caller's atomic-publish
-    step — the ``write_versioned`` manifest discipline)."""
-    import os
-
-    live = os.path.abspath(index_dir.rstrip("/"))
-    target = os.path.abspath(out_dir.rstrip("/"))
-    if target == live or (target + os.sep).startswith(live + os.sep):
-        # mode=overwrite would truncate the postings directory Spark is
-        # lazily reading mid-compaction — the live index would be
-        # destroyed and the "compacted" copy built from its own ruins.
-        raise ValueError(
-            "compact_bm25_index: out_dir must not equal or nest under "
-            f"index_dir (got out_dir={out_dir!r} inside {index_dir!r}); "
-            "write next to the live index and switch readers atomically"
-        )
-    base = index_dir.rstrip("/")
-    postings = spark.read.parquet(base + "/postings").select(
-        "token", "doc_id", "dl", "tf"
-    )
-    out = out_dir.rstrip("/")
-    (
-        postings.repartition("token")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .parquet(out + "/postings")
-    )
-    (
-        spark.read.parquet(base + "/stats")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(out + "/stats")
-    )
 
 
 def bm25_topk_from_index(
@@ -325,84 +289,40 @@ SELECT doc_id, score, rank FROM (
 """
 
 
-# ----- in-place auto-compaction (streaming maintenance policy) --------
+
+
+# ----- incremental maintenance (delta appends + in-place compaction) --
 #
-# All maintenance filesystem work goes through indexfs.IndexFS — plain
-# paths use os/shutil verbatim, URI paths (file:/hdfs:/s3a:) the Hadoop
-# FileSystem API — so the triad is operable wherever the Spark-side
-# delta writes already land (round 12; formerly driver-local-FS only
-# behind `local_maintenance_path`'s loud rejection). Unresolvable
-# schemes still raise loudly at IndexFS.for_path. SINGLE-WRITER as
-# ever; see indexfs module docstring for per-backend rename atomicity.
+# The index is a two-log client of operators/deltas.py: a micro-batch
+# appends ``postings/delta=<id>`` + ``stats/delta=<id>``, and the
+# compaction policy folds both logs in one commit. Crash safety,
+# recovery, the replay watermark and one-shot adoption are the shared
+# protocol; this module supplies only the fold.
+
+_BM25_LOG = DeltaLog("bm25 index maintenance", ("postings", "stats"), adopt=True)
 
 
-def _compact_workdir(index_dir: str) -> str:
-    return IndexFS.join(index_dir, ".compact")
-
-
-def _delta_dirs(fs: IndexFS, index_dir: str, sub: str) -> list[str]:
-    # non-integer delta= names (stray manual dirs) are skipped, never
-    # folded — a single one would otherwise kill every later
-    # compaction attempt at the int() parse (operators/deltas.delta_id)
-    from dask_datapipeline_spark.operators.deltas import delta_id
-
-    d = IndexFS.join(index_dir, sub)
-    return [
-        name
-        for name in fs.listdir(d)
-        if name.startswith("delta=")
-        and fs.isdir(IndexFS.join(d, name))
-        and delta_id(name) is not None
-    ]
-
-
-def _finish_compaction(fs: IndexFS, index_dir: str) -> None:
-    """Phase C of :func:`maybe_compact_bm25_index`, idempotent so a
-    crash anywhere inside replays cleanly: remove the consumed delta
-    dirs recorded in the COMMIT marker, move the compacted base in
-    under the marker's fresh ``dest`` name (skipped if a previous
-    attempt already moved it), then drop the work dir."""
+def append_to_bm25_index(batch: DataFrame, index_dir: str, batch_id: int) -> None:
+    """Append a (doc_id, text) batch as ``postings/delta=<batch_id>``
+    and ``stats/delta=<batch_id>``. Overwrite by stable batch id =
+    replay-idempotent: a crashed micro-batch rewrites the same rows
+    into the same directories. Postings are additive (a document
+    arrives in exactly one batch), so the delta union IS the postings
+    table and per-batch cost is O(batch). The index must already be in
+    delta layout — :func:`recover_bm25_compaction` adopts a one-shot
+    build."""
+    postings, stats = postings_frames(batch)
     base = index_dir.rstrip("/")
-    work = _compact_workdir(base)
-    commit = fs.read_json(IndexFS.join(work, "COMMIT"))
-    # the folded base's name is FRESH per compaction (one below the
-    # smallest existing delta id) and therefore never in the consumed
-    # list — so a phase-C replay after a crash between the move-in and
-    # the work-dir sweep cannot delete the base it just installed (a
-    # fixed delta=-1 destination WAS in consumed on second-and-later
-    # compactions, and the replayed rmtree destroyed the new base)
-    dest = commit["dest"]
-    for sub in ("postings", "stats"):
-        for name in commit[sub]:
-            fs.rmtree(IndexFS.join(base, sub, name))
-        src = IndexFS.join(work, sub, dest)
-        dst = IndexFS.join(base, sub, dest)
-        if fs.isdir(src):
-            # dst coexisting with a live src = partial copy from a
-            # crashed non-atomic rename; src is authoritative until
-            # the rename's source delete (round 14, _FlakyFS-pinned)
-            fs.rmtree(dst)
-            fs.move(src, dst)
-    fs.rmtree(work)
+    _write_postings(postings, f"{base}/postings/delta={batch_id}")
+    stats.write.mode("overwrite").parquet(f"{base}/stats/delta={batch_id}")
 
 
 def recover_bm25_compaction(index_dir: str) -> None:
-    """Resolve a compaction a crash left half-done (the
-    ``stream_incremental_hll`` mid-swap ``_recover()`` pattern, called
-    at sink start and before every compaction attempt): a work dir
-    WITH a COMMIT marker is past the atomic commit point — finish
-    phase C; one without is pre-commit garbage — drop it, the live
-    index was never touched."""
-    fs = IndexFS.for_path(index_dir, "recover_bm25_compaction")
-    base = index_dir.rstrip("/")
-    fs.sweep_tmp(base)  # stranded marker temps from a crashed writer
-    work = _compact_workdir(base)
-    if not fs.isdir(work):
-        return
-    if fs.isfile(IndexFS.join(work, "COMMIT")):
-        _finish_compaction(fs, base)
-    else:
-        fs.rmtree(work)
+    """Resolve a compaction a crash left half-done (called at sink
+    start and before every compaction attempt) and adopt a one-shot
+    ``build_bm25_index`` layout as ``delta=-1`` — see
+    ``operators/deltas.py::recover_log``."""
+    recover_log(index_dir, _BM25_LOG)
 
 
 def maybe_compact_bm25_index(
@@ -418,94 +338,32 @@ def maybe_compact_bm25_index(
     scores bit-identical (postings deltas are disjoint by doc_id;
     stats addition is exact integers; measured round 10: 64 deltas
     cost +60% probe latency, which is exactly the regression this
-    bounds).
+    bounds). Readers need no change: plain partition discovery, no
+    manifest.
 
-    Crash safety without changing the reader (plain partition
-    discovery, no manifest): phase A writes the compacted
-    postings/stats into ``<index>/.compact/`` (outside the partition
-    roots, invisible to readers); phase B atomically renames a COMMIT
-    marker recording the consumed delta names — the single commit
-    point; phase C removes consumed deltas, moves the compacted pair
-    in under a FRESH base id (one below every consumed delta — never a
-    consumed name, so replaying phase C can never delete the base it
-    just installed) and drops the work dir. A crash before B
-    leaves the live index untouched (work dir swept next call); a
-    crash after B replays phase C idempotently via
-    :func:`recover_bm25_compaction`. SINGLE-WRITER contract, same as
-    ``compact_minhash_index``: runs between micro-batches under the
-    sink's serialized foreachBatch, never concurrently with an append
-    or a reader mid-scan.
+    The two-phase commit, recovery, fresh base id and replay watermark
+    are ``operators/deltas.py::compact_log``. ``exclude_from`` is the
+    REPLAY WATERMARK for in-sink calls: deltas with batch id >=
+    ``exclude_from`` are NOT folded, so the in-flight batch's
+    overwrite-by-batch-id append stays idempotent under a post-crash
+    replay. SINGLE-WRITER contract, same as ``compact_minhash_index``.
+    """
 
-    ``exclude_from`` is the REPLAY WATERMARK for in-sink calls: deltas
-    with batch id >= ``exclude_from`` are NOT folded. Without it, a
-    sink compacting right after its own append would fold the current
-    batch's delta BEFORE Structured Streaming commits the batch — a
-    crash in that window replays the batch, recreates its delta, and
-    the rows count twice (once in the folded base, once in the replayed
-    delta). Folding only strictly-older deltas keeps the append's
-    overwrite-by-batch-id idempotency intact: the replayed delta
-    overwrites the still-live directory it originally wrote."""
-    if max_deltas < 1:
-        raise ValueError(f"max_deltas={max_deltas} must be >= 1")
-    fs = IndexFS.for_path(index_dir, "maybe_compact_bm25_index")
-    base = index_dir.rstrip("/")
-    recover_bm25_compaction(base)
-
-    def _eligible(names: list[str]) -> list[str]:
-        if exclude_from is None:
-            return names
-        return [
-            n for n in names if int(n.split("=", 1)[1]) < exclude_from
-        ]
-
-    consumed = {
-        "postings": _eligible(_delta_dirs(fs, base, "postings")),
-        "stats": _eligible(_delta_dirs(fs, base, "stats")),
-    }
-    if len(consumed["postings"]) <= max_deltas:
-        return False
-    # the folded base gets a FRESH id one below every consumed delta —
-    # never a name in the consumed list, so phase C stays idempotent
-    # (see _finish_compaction)
-    dest = "delta={}".format(
-        min(int(n.split("=", 1)[1]) for n in consumed["postings"]) - 1
-    )
-    work = _compact_workdir(base)
-    fs.rmtree(work)
-    # phase A: materialize the folded index OUTSIDE the live roots —
-    # reading ONLY the consumed delta dirs (an excluded in-flight
-    # delta must not leak into the base)
-    (
-        spark.read.parquet(
-            *[IndexFS.join(base, "postings", n) for n in consumed["postings"]]
+    def fold(src: dict, dst: dict, work: str) -> None:
+        _write_postings(
+            spark.read.parquet(*src["postings"]).select(
+                "token", "doc_id", "dl", "tf"
+            ),
+            dst["postings"],
         )
-        .select("token", "doc_id", "dl", "tf")
-        .repartition("token")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .parquet(IndexFS.join(work, "postings", dest))
-    )
-    (
-        spark.read.parquet(
-            *[IndexFS.join(base, "stats", n) for n in consumed["stats"]]
+        (
+            spark.read.parquet(*src["stats"])
+            .agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("sum_dl").cast("long").alias("sum_dl"),
+            )
+            .write.mode("overwrite")
+            .parquet(dst["stats"])
         )
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(IndexFS.join(work, "stats", dest))
-    )
-    # phase B: the atomic commit point (marker file rename). The writer
-    # fence is re-checked HERE, not only at batch start — one batch
-    # performs several state-touching flips and a mid-batch takeover
-    # must stop before this one (ADVICE r13); a fenced writer leaves
-    # only a pre-commit work dir, swept by the next recover
-    if lease is not None:
-        lease.check_and_renew()
-    fs.write_json_atomic(
-        IndexFS.join(work, "COMMIT"), {**consumed, "dest": dest}
-    )
-    # phase C
-    _finish_compaction(fs, base)
-    return True
+
+    return compact_log(index_dir, _BM25_LOG, fold, max_deltas, exclude_from, lease)

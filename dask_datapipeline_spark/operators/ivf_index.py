@@ -43,6 +43,15 @@ from pyspark.sql import types as T
 
 from dask_datapipeline_spark.errors import require_columns
 from dask_datapipeline_spark.indexfs import IndexFS
+from dask_datapipeline_spark.operators.deltas import (
+    DeltaLog,
+    adopt_flat_layout,
+    compact_log,
+    delta_id,
+    list_deltas,
+    move_in,
+    recover_log,
+)
 from dask_datapipeline_spark.operators.similarity import (
     TRAIN_SEED,
     _cell_of_udf,
@@ -102,11 +111,7 @@ def build_ivf_index(
         os.path.join(path, "vectors")
     )
     spark = corpus.sparkSession
-    book = spark.createDataFrame(
-        [(int(cid), [float(x) for x in row]) for cid, row in zip(c_ids, c_mat)],
-        "cell_id long, centroid array<double>",
-    )
-    book.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
+    _write_codebook(spark, c_ids, c_mat, os.path.join(path, "codebook"))
     meta = {
         "id_col": id_col,
         "vec_col": vec_col,
@@ -116,6 +121,13 @@ def build_ivf_index(
     }
     _write_meta(spark, path, meta)
     return meta
+
+
+def _write_codebook(spark: SparkSession, c_ids, c_mat, path: str) -> None:
+    spark.createDataFrame(
+        [(int(cid), [float(x) for x in row]) for cid, row in zip(c_ids, c_mat)],
+        "cell_id long, centroid array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def _load_codebook(spark: SparkSession, path: str):
@@ -545,33 +557,31 @@ def ivfpq_topk_from_index(
 # assignment of every existing vector is untouched and probes are
 # bit-identical to a one-shot build over the union), and a
 # threshold-triggered two-phase compaction folds committed deltas back
-# into one base delta out of the query path. Probes need NO code
-# change: partition discovery surfaces (delta, __cell) and the static
-# ``__cell IN (...)`` filter prunes cell directories at either depth.
+# into one base delta out of the query path. The vectors log is a
+# client of operators/deltas.py (listing, commit, recovery, watermark,
+# adoption); this module supplies the fold and the retrain hook.
+# Probes need NO code change: partition discovery surfaces
+# (delta, __cell) and the static ``__cell IN (...)`` filter prunes
+# cell directories at either depth.
 
 
-def _adopt_ivf_flat_layout(path: str) -> None:
-    """Move a one-shot index's flat ``vectors/__cell=K`` dirs under
-    ``vectors/delta=-1/`` so delta appends see ONE consistent
-    partition depth (the bm25 ``_adopt_flat_layout`` precedent).
-    Idempotent — a crash mid-move resumes on the next call; runs under
-    the single-writer contract like every maintenance step."""
-    fs = IndexFS.for_path(path, "_adopt_ivf_flat_layout")
-    root = IndexFS.join(path, "vectors")
-    if not fs.isdir(root):
-        return
-    flat = [d for d in fs.listdir(root) if d.startswith("__cell=")]
-    if not flat:
-        return
-    dest = IndexFS.join(root, "delta=-1")
-    fs.makedirs(dest)
-    for d in flat:
-        # re-run of a crashed adoption: a partially-copied cell under
-        # dest is rebuilt from the still-present flat source
-        fs.rmtree(IndexFS.join(dest, d))
-        fs.move(IndexFS.join(root, d), IndexFS.join(dest, d))
-    # loose root files (_SUCCESS markers) confuse neither discovery
-    # nor the compactor; leave them
+def _install_retrained(fs: IndexFS, root: str, work: str, commit: dict) -> None:
+    """Phase-C hook of a RETRAIN commit (:func:`compact_ivf_index`):
+    swap the staged codebook in and rewrite ``_META`` before the
+    vectors move — both idempotent (the move is src-presence-guarded;
+    the _META rewrite writes the same marker-recorded content on every
+    replay). Probes between steps are excluded by the single-writer /
+    no-concurrent-reader maintenance contract."""
+    if commit.get("retrained"):
+        move_in(
+            fs, IndexFS.join(work, "codebook"), IndexFS.join(root, "codebook")
+        )
+        fs.write_json_atomic(IndexFS.join(root, "_META"), commit["meta"])
+
+
+_IVF_LOG = DeltaLog(
+    "ivf index maintenance", ("vectors",), adopt=True, install=_install_retrained
+)
 
 
 def append_to_ivf_index(batch: DataFrame, path: str, batch_id: int) -> None:
@@ -580,25 +590,25 @@ def append_to_ivf_index(batch: DataFrame, path: str, batch_id: int) -> None:
     the partitioned write's hash exchange, exactly the build plan).
     Overwrite by stable batch id = replay-idempotent: a crashed
     micro-batch rewrites the same rows into the same directory.
-    Codebook and _META are never touched. Maintenance (adoption/delta
-    listing) speaks any Hadoop FS URI via indexfs (round 12), same as
-    the build/probe paths always did."""
+    Codebook and _META are never touched. A one-shot build's flat
+    ``vectors/__cell=K`` layout is adopted as ``delta=-1`` first."""
     spark = batch.sparkSession
     meta = _read_meta(spark, path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     require_columns(batch, [id_col, vec_col])
-    _adopt_ivf_flat_layout(path)
+    fs = IndexFS.for_path(path, "append_to_ivf_index")
+    root = IndexFS.join(path, "vectors")
+    adopt_flat_layout(fs, root)
     # normalize the batch's vector dtype to the INDEX's before
     # assignment: a double-element batch appended to a float-element
     # index writes a delta whose parquet physical type conflicts with
     # the base — every later union read fails with
     # SchemaColumnConvertNotSupported. Cast first, so assignment and
     # storage both see exactly what the index stores.
-    fs = IndexFS.for_path(path, "append_to_ivf_index")
-    existing = _ivf_delta_dirs(fs, path)
+    existing = list_deltas(fs, root)
     if existing:
         want = spark.read.parquet(
-            IndexFS.join(path, "vectors", existing[0])
+            IndexFS.join(root, existing[0])
         ).schema[vec_col].dataType
         batch = batch.withColumn(vec_col, F.col(vec_col).cast(want))
     cell_of = _cell_of_udf(*_load_codebook(spark, path))
@@ -610,86 +620,74 @@ def append_to_ivf_index(batch: DataFrame, path: str, batch_id: int) -> None:
     )
 
 
-def _ivf_workdir(path: str) -> str:
-    return IndexFS.join(path, ".compact")
-
-
-def _ivf_delta_dirs(fs: IndexFS, path: str) -> list[str]:
-    # non-integer delta= names (stray manual dirs) are skipped, never
-    # folded or priced — a single one would otherwise kill every later
-    # compaction/drift call at the int() parse, and an ANSI cast of a
-    # non-numeric partition value throws at read time anyway
-    # (operators/deltas.delta_id is the shared parse)
-    from dask_datapipeline_spark.operators.deltas import delta_id
-
-    root = IndexFS.join(path, "vectors")
-    return [
-        d
-        for d in fs.listdir(root)
-        if d.startswith("delta=")
-        and fs.isdir(IndexFS.join(root, d))
-        and delta_id(d) is not None
-    ]
-
-
-def _finish_ivf_compaction(fs: IndexFS, path: str) -> None:
-    """Phase C, idempotent (the bm25 discipline): drop consumed delta
-    dirs named in the COMMIT marker, move the folded base in under the
-    marker's fresh ``dest`` name unless a prior attempt already did,
-    drop the work dir. A RETRAIN commit (see :func:`compact_ivf_index`)
-    additionally swaps the codebook in and rewrites ``_META`` — both
-    steps idempotent (the move is src-presence-guarded; the _META
-    rewrite writes the same marker-recorded content on every replay),
-    so a crash anywhere in C still replays cleanly."""
-    base = path.rstrip("/")
-    work = _ivf_workdir(base)
-    commit = fs.read_json(IndexFS.join(work, "COMMIT"))
-    # the folded base's name is FRESH per compaction and never in the
-    # consumed list — a phase-C replay after a crash between the
-    # move-in and the work-dir sweep cannot delete the base it just
-    # installed (the bm25 _finish_compaction discipline)
-    dest = commit["dest"]
-    # retrained codebook first: probes between steps are excluded by
-    # the single-writer/no-concurrent-reader maintenance contract
-    if commit.get("retrained"):
-        src_book = IndexFS.join(work, "codebook")
-        dst_book = IndexFS.join(base, "codebook")
-        if fs.isdir(src_book):
-            fs.rmtree(dst_book)
-            fs.move(src_book, dst_book)
-        fs.write_json_atomic(IndexFS.join(base, "_META"), commit["meta"])
-    for name in commit["vectors"]:
-        fs.rmtree(IndexFS.join(base, "vectors", name))
-    src = IndexFS.join(work, "vectors", dest)
-    dst = IndexFS.join(base, "vectors", dest)
-    if fs.isdir(src):
-        # dst coexisting with a live src = partial copy from a crashed
-        # non-atomic rename; src is authoritative until the rename's
-        # source delete (round 14, _FlakyFS-pinned)
-        fs.rmtree(dst)
-        fs.move(src, dst)
-    fs.rmtree(work)
-
-
 def recover_ivf_compaction(path: str) -> None:
     """Resolve a half-done compaction at sink start / before every
-    attempt: a work dir WITH a COMMIT marker is past the commit point
-    — finish phase C; without one it is pre-commit garbage — drop it,
-    the live index was never touched. Also resumes a half-done flat-
-    layout ADOPTION (idempotent): a crash midway through
-    :func:`_adopt_ivf_flat_layout` leaves ``vectors/`` mixed-depth and
+    attempt (``operators/deltas.py::recover_log``), including a
+    retrain commit's codebook swap. Also resumes a half-done flat-
+    layout ADOPTION: a crash midway leaves ``vectors/`` mixed-depth and
     probes failing with CONFLICTING_DIRECTORY_STRUCTURES until the next
     append — sink-start recovery heals it immediately instead."""
-    fs = IndexFS.for_path(path, "recover_ivf_compaction")
-    fs.sweep_tmp(path.rstrip("/"))  # stranded _META/marker temps
-    _adopt_ivf_flat_layout(path)
-    work = _ivf_workdir(path.rstrip("/"))
-    if not fs.isdir(work):
-        return
-    if fs.isfile(IndexFS.join(work, "COMMIT")):
-        _finish_ivf_compaction(fs, path)
-    else:
-        fs.rmtree(work)
+    recover_log(path, _IVF_LOG)
+
+
+def _fold_vectors(
+    spark: SparkSession,
+    path: str,
+    retrain: bool = False,
+    train_sample: int = 4096,
+    train_iter: int = 10,
+    train_seed: int = TRAIN_SEED,
+):
+    """Phase-A fold of the vectors log (the ``fold`` argument of
+    ``operators/deltas.py::compact_log``). ``basePath`` makes the
+    multiple delta roots (each with __cell= children) read as one
+    partitioned table instead of tripping
+    CONFLICTING_DIRECTORY_STRUCTURES. Without ``retrain`` it is a
+    verbatim union; with it, a fresh codebook is trained on the folded
+    corpus, staged in the work dir, and every vector reassigned."""
+
+    def fold(src: dict, dst: dict, work: str) -> dict:
+        meta = _read_meta(spark, path)
+        id_col, vec_col = meta["id_col"], meta["vec_col"]
+        out = (
+            spark.read.option("basePath", IndexFS.join(path, "vectors"))
+            .parquet(*src["vectors"])
+            .select(id_col, vec_col, "__cell")
+        )
+        extra: dict = {}
+        if retrain:
+            from dask_datapipeline_spark.operators.similarity import (
+                _kmeans_lloyd,
+                _train_sample,
+            )
+
+            c_mat = _kmeans_lloyd(
+                _train_sample(out, id_col, vec_col, train_sample, train_seed),
+                meta["n_cells"],
+                train_iter,
+                train_seed,
+                spherical=True,
+            )
+            c_ids = np.arange(meta["n_cells"], dtype=np.int64)
+            cell_of = _cell_of_udf(c_ids, c_mat)
+            out = fan_out(out.select(id_col, vec_col)).select(
+                id_col, vec_col, cell_of(F.col(vec_col)).alias("__cell")
+            )
+            _write_codebook(spark, c_ids, c_mat, IndexFS.join(work, "codebook"))
+            extra = {
+                "retrained": True,
+                "meta": {
+                    **meta,
+                    "trained": True,
+                    "retrain_sample": int(train_sample),
+                    "retrain_iter": int(train_iter),
+                    "retrain_seed": int(train_seed),
+                },
+            }
+        out.write.mode("overwrite").partitionBy("__cell").parquet(dst["vectors"])
+        return extra
+
+    return fold
 
 
 def maybe_compact_ivf_index(
@@ -700,59 +698,18 @@ def maybe_compact_ivf_index(
     lease=None,
 ) -> bool:
     """Threshold-triggered two-phase compaction of the vector deltas —
-    fold committed ``delta=*`` dirs into one ``delta=-1`` base out of
-    the query path; probes are bit-identical before and after (the
-    fold is a verbatim union; assignment never recomputes). Crash
-    safety = the bm25 protocol verbatim: phase A materializes into
-    ``.compact/`` (invisible to readers), phase B atomically renames a
-    COMMIT marker naming the consumed deltas, phase C replays
-    idempotently via :func:`recover_ivf_compaction`.
+    fold committed ``delta=*`` dirs into one fresh base out of the
+    query path; probes are bit-identical before and after (the fold is
+    a verbatim union; assignment never recomputes). Crash safety,
+    recovery and the fresh base id are ``operators/deltas.py``'s.
 
     ``exclude_from`` is the REPLAY WATERMARK for in-sink calls (see
     ``maybe_compact_bm25_index``): deltas with batch id >=
     ``exclude_from`` are neither counted nor folded, preserving the
     in-flight batch's overwrite idempotency."""
-    if max_deltas < 1:
-        raise ValueError(f"max_deltas={max_deltas} must be >= 1")
-    fs = IndexFS.for_path(path, "maybe_compact_ivf_index")
-    base = path.rstrip("/")
-    recover_ivf_compaction(base)
-    deltas = _ivf_delta_dirs(fs, base)
-    if exclude_from is not None:
-        deltas = [d for d in deltas if int(d.split("=", 1)[1]) < exclude_from]
-    if len(deltas) <= max_deltas:
-        return False
-    meta = _read_meta(spark, base)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    dest = "delta={}".format(
-        min(int(d.split("=", 1)[1]) for d in deltas) - 1
+    return compact_log(
+        path, _IVF_LOG, _fold_vectors(spark, path), max_deltas, exclude_from, lease
     )
-    work = _ivf_workdir(base)
-    fs.rmtree(work)
-    # phase A: fold ONLY the consumed deltas outside the live root —
-    # basePath makes the multiple delta roots (each with __cell=
-    # children) read as one partitioned table instead of tripping
-    # CONFLICTING_DIRECTORY_STRUCTURES
-    (
-        spark.read.option("basePath", IndexFS.join(base, "vectors"))
-        .parquet(*[IndexFS.join(base, "vectors", d) for d in deltas])
-        .select(id_col, vec_col, "__cell")
-        .write.mode("overwrite")
-        .partitionBy("__cell")
-        .parquet(IndexFS.join(work, "vectors", dest))
-    )
-    # phase B: the atomic commit point (marker file rename). The writer
-    # fence is re-checked HERE, not only at batch start — one batch
-    # performs several state-touching flips and a mid-batch takeover
-    # must stop before this one (ADVICE r13); a fenced writer leaves
-    # only a pre-commit work dir, swept by the next recover
-    if lease is not None:
-        lease.check_and_renew()
-    fs.write_json_atomic(
-        IndexFS.join(work, "COMMIT"), {"vectors": deltas, "dest": dest}
-    )
-    _finish_ivf_compaction(fs, base)
-    return True
 
 
 # ----- codebook drift: measurement + the retrain escape hatch ---------
@@ -796,7 +753,7 @@ def ivf_drift_report(spark: SparkSession, path: str) -> DataFrame:
     meta = _read_meta(spark, base)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     root = IndexFS.join(base, "vectors")
-    deltas = _ivf_delta_dirs(fs, base)
+    deltas = list_deltas(fs, root)
     if deltas:
         vecs = (
             spark.read.option("basePath", root)
@@ -808,7 +765,7 @@ def ivf_drift_report(spark: SparkSession, path: str) -> DataFrame:
                 F.col("__cell").cast("long").alias("__cell"),
             )
         )
-        base_id = min(int(d.split("=", 1)[1]) for d in deltas)
+        base_id = min(delta_id(d) for d in deltas)
     else:  # flat one-shot layout: the whole index is the base
         vecs = spark.read.parquet(root).select(
             F.lit(-1).cast("long").alias("delta"),
@@ -850,9 +807,7 @@ def ivf_drift_report(spark: SparkSession, path: str) -> DataFrame:
         raise ValueError(
             f"ivf_drift_report: base delta={base_id} holds no vectors"
         )
-    delta_ids = sorted(
-        int(d.split("=", 1)[1]) for d in deltas
-    ) or [-1]
+    delta_ids = sorted(delta_id(d) for d in deltas) or [-1]
     grid = spark.createDataFrame(
         [
             (int(d), int(c), int(n))
@@ -949,8 +904,9 @@ def compact_ivf_index(
     train_seed: int = TRAIN_SEED,
 ) -> bool:
     """Unconditional full fold of every committed delta into one base
-    (the threshold-free twin of :func:`maybe_compact_ivf_index`; same
-    two-phase COMMIT protocol, same crash recovery).
+    (no threshold, no watermark — the same
+    ``operators/deltas.py::compact_log`` commit and crash recovery as
+    :func:`maybe_compact_ivf_index`).
 
     ``retrain=False``: a pure physical re-layout — probes bit-identical
     before and after (pytest-pinned).
@@ -966,61 +922,12 @@ def compact_ivf_index(
     retrain parameters. Crash safety: the new codebook lands in the
     work dir during phase A, the COMMIT marker records it plus the new
     meta, and phase C's swap is replay-idempotent
-    (:func:`_finish_ivf_compaction`)."""
-    fs = IndexFS.for_path(path, "compact_ivf_index")
-    base = path.rstrip("/")
-    recover_ivf_compaction(base)
-    deltas = _ivf_delta_dirs(fs, base)
-    if not deltas or (len(deltas) == 1 and not retrain):
-        return False
-    meta = _read_meta(spark, base)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    dest = "delta={}".format(min(int(d.split("=", 1)[1]) for d in deltas) - 1)
-    work = _ivf_workdir(base)
-    fs.rmtree(work)
-    all_vecs = (
-        spark.read.option("basePath", IndexFS.join(base, "vectors"))
-        .parquet(*[IndexFS.join(base, "vectors", d) for d in deltas])
-        .select(id_col, vec_col, "__cell")
+    (:func:`_install_retrained`)."""
+    # a pure re-layout of a single delta changes nothing; a retrain
+    # reassigns, so even one delta is worth folding
+    return compact_log(
+        path,
+        _IVF_LOG,
+        _fold_vectors(spark, path, retrain, train_sample, train_iter, train_seed),
+        None if retrain else 1,
     )
-    commit: dict = {"vectors": deltas, "dest": dest}
-    if retrain:
-        from dask_datapipeline_spark.operators.similarity import (
-            _kmeans_lloyd,
-            _train_sample,
-        )
-
-        c_mat = _kmeans_lloyd(
-            _train_sample(all_vecs, id_col, vec_col, train_sample, train_seed),
-            meta["n_cells"],
-            train_iter,
-            train_seed,
-            spherical=True,
-        )
-        c_ids = np.arange(meta["n_cells"], dtype=np.int64)
-        cell_of = _cell_of_udf(c_ids, c_mat)
-        out = fan_out(all_vecs.select(id_col, vec_col)).select(
-            id_col, vec_col, cell_of(F.col(vec_col)).alias("__cell")
-        )
-        spark.createDataFrame(
-            [(int(cid), [float(x) for x in row]) for cid, row in zip(c_ids, c_mat)],
-            "cell_id long, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            IndexFS.join(work, "codebook")
-        )
-        commit["retrained"] = True
-        commit["meta"] = {
-            **meta,
-            "trained": True,
-            "retrain_sample": int(train_sample),
-            "retrain_iter": int(train_iter),
-            "retrain_seed": int(train_seed),
-        }
-    else:
-        out = all_vecs
-    out.write.mode("overwrite").partitionBy("__cell").parquet(
-        IndexFS.join(work, "vectors", dest)
-    )
-    fs.write_json_atomic(IndexFS.join(work, "COMMIT"), commit)
-    _finish_ivf_compaction(fs, base)
-    return True

@@ -329,8 +329,8 @@ def compact_minhash_index(
         ):
             fs.rmtree(IndexFS.join(index_path, d))
     if not fold:
-        # nothing eligible (e.g. compact_every=1 at batch 0 with only
-        # the in-flight tag committed): folding would rewrite the
+        # nothing eligible (e.g. a call at batch 0 with only the
+        # in-flight tag committed): folding would rewrite the
         # ENTIRE base for zero file-count reduction — skip
         return cur
     base_sh = cur["shingles"]

@@ -16,8 +16,13 @@ Scale rationale:
   (rule of thumb: ~2-3× total executor cores, partitions ≤ ~200 MB).
 - **Arrow on** — pandas UDFs and ``toPandas`` cross the JVM/Python
   boundary in columnar batches, not pickled rows.
-- ``maxPartitionBytes`` 128 MB keeps scan tasks memory-bounded
-  regardless of total input size.
+- Scan-task sizing (``maxPartitionBytes``) is Spark's own 128 MB
+  default — not set here, so a deployment's value wins.
+
+Cluster-specific values (scan split size, AQE advisory partition size,
+shuffle codec, ...) go through ``spark-submit --conf`` or
+``get_spark(extra_conf=...)``; this module reads no environment
+overrides for them.
 """
 
 from __future__ import annotations
@@ -69,15 +74,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Columnar JVM<->Python transfer for pandas UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Scan-task sizing: bounded tasks independent of input size.
-        # Round 14: env-overridable — a 100 TB sequential-scan
-        # deployment raises this to 512m-1g to cut map-task count and
-        # shuffle block fan-out (guide §2.2/§6); the local default
-        # stays Spark's 128m so the driver's bench is comparable.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
         # Dimension tables under 64 MB broadcast automatically.
         .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
         # Deterministic session timezone for timestamp parity with the
@@ -85,22 +81,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    # Round 14: production-cluster knobs, env-parameterised with
-    # LOCAL-DEFAULT = Spark default (unset ⇒ no conf line at all, so
-    # local behavior and the driver's bench are bit-comparable with
-    # earlier rounds). Production values and rationale are recorded in
-    # OPTIMIZATION_r14.md §"Production configuration":
-    #   SPARK_GRAFT_ADVISORY_BYTES   -> adaptive.advisoryPartitionSizeInBytes
-    #     (256m on big clusters: fewer, larger post-shuffle partitions)
-    #   SPARK_GRAFT_IO_CODEC         -> spark.io.compression.codec
-    #     (zstd on big networks: better shuffle ratio for a bit of CPU)
-    for env, key in (
-        ("SPARK_GRAFT_ADVISORY_BYTES", "spark.sql.adaptive.advisoryPartitionSizeInBytes"),
-        ("SPARK_GRAFT_IO_CODEC", "spark.io.compression.codec"),
-    ):
-        val = os.environ.get(env)
-        if val:
-            builder = builder.config(key, val)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

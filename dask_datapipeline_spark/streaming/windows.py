@@ -763,7 +763,6 @@ def stream_incremental_dedup(
     checkpoint_dir: str | None = None,
     threshold: float = 0.5,
     timeout_sec: int = 240,
-    compact_every: int | None = None,
     compact_max_inc: int | None = None,
     lease=None,
 ) -> None:
@@ -796,18 +795,13 @@ def stream_incremental_dedup(
     same one (via the in-batch union). The catalog row exploits this
     to share the batch oracle.
 
-    ``compact_every=N`` folds the increment list into one versioned
-    base pair (``compact_minhash_index``) after every Nth batch —
-    bounding the index's file count for a long-running ingest; flags
-    are unchanged by compaction, so N is an operational knob only;
-    ``compact_max_inc=K`` is the threshold-based twin
-    (``maybe_compact_minhash_index``) — compact whenever the committed
-    increment list exceeds K pairs, which bounds file count by STATE
-    rather than cadence (a cadence knob over-compacts small batches
-    and under-compacts big ones)."""
+    ``compact_max_inc=K`` folds the increment list into one versioned
+    base pair (``maybe_compact_minhash_index``) whenever the committed
+    increment list exceeds K pairs — bounding the index's file count
+    for a long-running ingest by STATE, not cadence. Flags are
+    unchanged by compaction, so K is an operational knob only."""
     from dask_datapipeline_spark.operators.minhash_index import (
         append_to_minhash_index,
-        compact_minhash_index,
         incremental_near_dup_flags,
         maybe_compact_minhash_index,
     )
@@ -834,10 +828,6 @@ def stream_incremental_dedup(
         # fold: the append's tag-in-manifest idempotency is what makes
         # a post-crash replay safe, and folding the tag would erase it
         # — the replayed batch would re-append rows already in the base.
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_minhash_index(
-                spark, index_path, keep_from=tag, lease=lease
-            )
         if compact_max_inc is not None:
             maybe_compact_minhash_index(
                 spark, index_path, compact_max_inc, keep_from=tag,
@@ -1013,6 +1003,60 @@ def stateful_cusum(
     )
 
 
+def _delta_sink(
+    spark: SparkSession,
+    staged_dir: str,
+    root: str,
+    schema,
+    checkpoint_dir: str | None,
+    timeout_sec: int,
+    lease,
+    recover,
+    append,
+    compact,
+    compact_max_deltas: int | None,
+) -> None:
+    """The shared driver of the ``delta=<batch_id>`` sinks (BM25, IVF,
+    stage deltas — the ``operators/deltas.py`` clients): acquire the
+    writer lease, ``recover(root)`` a half-done compaction (and adopt a
+    one-shot layout), then per micro-batch renew the lease,
+    ``append(batch_df, batch_id)`` the batch's delta (overwrite by
+    checkpointed batch id — replay-idempotent) and, with
+    ``compact_max_deltas``, run the client's ``compact`` policy.
+
+    Compaction runs INSIDE foreachBatch, i.e. under the sink's
+    serialized single-writer contract. ``exclude_from=batch_id`` keeps
+    THIS batch's (not-yet-checkpoint-committed) delta out of the fold:
+    a crash after compaction but before the streaming commit replays
+    the batch, and its overwrite append is idempotent only while its
+    delta dir is still live — folding it would double-count the batch.
+    """
+    if lease is not None:  # single-writer contract, enforced (r13)
+        lease.acquire()
+    recover(root)
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if lease is not None:
+            lease.check_and_renew()
+        append(batch_df, batch_id)
+        if compact_max_deltas is not None:
+            compact(
+                spark, root, compact_max_deltas, exclude_from=batch_id,
+                lease=lease,
+            )
+
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged_dir)
+        .writeStream.foreachBatch(_apply)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir or root + ".ckpt")
+        .start()
+    )
+    _drain(q, timeout_sec)
+
+
 def stream_incremental_bm25_index(
     spark: SparkSession,
     staged_dir: str,
@@ -1046,11 +1090,10 @@ def stream_incremental_bm25_index(
     index is adopted on entry: its flat part files move into
     ``delta=-1`` (Spark refuses mixed-depth layouts), after which
     batch-built and streamed contributions read as one table.
-    Production compaction (fold old deltas into a base) is
-    ``operators/bm25.py::compact_bm25_index``; ``compact_max_deltas=N``
-    turns on the in-sink maintenance POLICY instead: after each delta
-    append, ``maybe_compact_bm25_index`` folds the index in place once
-    the delta count exceeds N (crash-safe two-phase commit; scores
+    ``compact_max_deltas=N`` turns on the in-sink maintenance POLICY:
+    after each delta append, ``maybe_compact_bm25_index`` folds the
+    index in place once the delta count exceeds N (crash-safe
+    two-phase commit in ``operators/deltas.py``; scores
     bit-identical — round 10 measured 64 deltas costing +60% probe
     latency, which this bounds at O(N) files). Half-done compactions
     from a previous crash are recovered at sink start.
@@ -1062,84 +1105,19 @@ def stream_incremental_bm25_index(
     apply (a stale owner that lost the lease stops with
     ``LeaseFencedError`` instead of interleaving flips)."""
     from dask_datapipeline_spark.operators.bm25 import (
+        append_to_bm25_index,
         maybe_compact_bm25_index,
-        postings_frames,
         recover_bm25_compaction,
     )
 
     base = index_dir.rstrip("/")
-    if lease is not None:
-        lease.acquire()
-    recover_bm25_compaction(base)
-
-    def _adopt_flat_layout() -> None:
-        """An index built by ``build_bm25_index`` stores flat part
-        files under postings/ and stats/; Spark refuses mixed-depth
-        layouts, so deltas cannot land next to them. Adopt the batch
-        build as the BASE delta: move its files into ``delta=-1``
-        (idempotent — once moved, no flat files remain), after which
-        the one-shot and streamed contributions read as one
-        partitioned table. Speaks any Hadoop FS URI via indexfs
-        (round 12), like the rest of the maintenance triad."""
-        from dask_datapipeline_spark.indexfs import IndexFS
-
-        fs = IndexFS.for_path(base, "stream_incremental_bm25_index")
-        for sub in ("postings", "stats"):
-            d = IndexFS.join(base, sub)
-            flat = [
-                f
-                for f in fs.listdir(d)
-                if fs.isfile(IndexFS.join(d, f))
-            ]
-            if not flat:
-                continue
-            dest = IndexFS.join(d, "delta=-1")
-            fs.makedirs(dest)
-            for f in flat:
-                # re-run of a crashed adoption: a half-renamed file
-                # (copy+delete stores) is rebuilt from the source
-                fs.delete_file(IndexFS.join(dest, f))
-                fs.move(IndexFS.join(d, f), IndexFS.join(dest, f))
-
-    _adopt_flat_layout()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if lease is not None:
-            lease.check_and_renew()
-        postings, stats = postings_frames(batch_df)
-        (
-            postings.repartition("token")
-            .sortWithinPartitions("token", "doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{base}/postings/delta={batch_id}")
-        )
-        stats.write.mode("overwrite").parquet(f"{base}/stats/delta={batch_id}")
-        # maintenance policy: runs INSIDE foreachBatch, i.e. under the
-        # sink's serialized single-writer contract. exclude_from keeps
-        # THIS batch's (not-yet-checkpoint-committed) delta out of the
-        # fold: a crash after compaction but before the streaming
-        # commit replays the batch, and its overwrite-by-batch-id
-        # append is idempotent only while its delta dir is still live
-        # — folding it would make the replay double-count the batch
-        if compact_max_deltas is not None:
-            maybe_compact_bm25_index(
-                spark, base, compact_max_deltas, exclude_from=batch_id,
-                lease=lease,
-            )
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or base + ".ckpt",
-        )
-        .start()
+    _delta_sink(
+        spark, staged_dir, base, schema, checkpoint_dir, timeout_sec, lease,
+        recover=recover_bm25_compaction,
+        append=lambda df, b: append_to_bm25_index(df, base, b),
+        compact=maybe_compact_bm25_index,
+        compact_max_deltas=compact_max_deltas,
     )
-    _drain(q, timeout_sec)
 
 
 def stream_stage_deltas(
@@ -1186,32 +1164,15 @@ def stream_stage_deltas(
     )
 
     out = out_dir.rstrip("/")
-    if lease is not None:  # single-writer contract, enforced (r13)
-        lease.acquire()
-    recover_delta_compaction(out)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if lease is not None:
-            lease.check_and_renew()
-        stage_fn(batch_df).write.mode("overwrite").parquet(
-            f"{out}/delta={batch_id}"
-        )
-        if compact_max_deltas is not None:
-            maybe_compact_deltas(
-                spark, out, compact_max_deltas, exclude_from=batch_id,
-                lease=lease,
-            )
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir or out + ".ckpt")
-        .start()
+    _delta_sink(
+        spark, staged_dir, out, schema, checkpoint_dir, timeout_sec, lease,
+        recover=recover_delta_compaction,
+        append=lambda df, b: stage_fn(df).write.mode("overwrite").parquet(
+            f"{out}/delta={b}"
+        ),
+        compact=maybe_compact_deltas,
+        compact_max_deltas=compact_max_deltas,
     )
-    _drain(q, timeout_sec)
 
 
 def stream_incremental_hll(
@@ -1497,27 +1458,10 @@ def stream_incremental_ivf_index(
     )
 
     base = index_path.rstrip("/")
-    if lease is not None:  # single-writer contract, enforced (r13)
-        lease.acquire()
-    recover_ivf_compaction(base)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if lease is not None:
-            lease.check_and_renew()
-        append_to_ivf_index(batch_df, base, batch_id)
-        if compact_max_deltas is not None:
-            maybe_compact_ivf_index(
-                spark, base, compact_max_deltas, exclude_from=batch_id,
-                lease=lease,
-            )
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir or base + ".ckpt")
-        .start()
+    _delta_sink(
+        spark, staged_dir, base, schema, checkpoint_dir, timeout_sec, lease,
+        recover=recover_ivf_compaction,
+        append=lambda df, b: append_to_ivf_index(df, base, b),
+        compact=maybe_compact_ivf_index,
+        compact_max_deltas=compact_max_deltas,
     )
-    _drain(q, timeout_sec)

@@ -6,6 +6,7 @@ crashes mid-copy, between copy and source-delete, and mid-marker."""
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,13 +21,6 @@ def flaky():
     uninstall()
 
 
-def _mk_deltas(spark, root, n=3, rows=4):
-    for i in range(n):
-        spark.range(rows).withColumn("b", F.lit(i)).write.parquet(
-            f"{root}/delta={i}"
-        )
-
-
 def _rows(spark, path):
     df = spark.read.parquet(path)
     if "delta" in df.columns:  # physical partition artifact, never data
@@ -34,92 +28,165 @@ def _rows(spark, path):
     return sorted(map(tuple, df.collect()))
 
 
-# ----- delta-log compaction ------------------------------------------------
+# ----- delta-log compaction: one matrix over every client -------------------
 
 
-@pytest.mark.parametrize(
-    "step,after",
-    [
-        ("move.staged", 0),  # copy complete, source delete pending
-        ("move.copy", 1),  # strict prefix of entries copied (partial dst)
-        ("move.copy", 0),  # dst created but EMPTY
-    ],
-)
-def test_delta_compaction_heals_mid_rename(spark, tmp_path, flaky, step, after):
-    from dask_datapipeline_spark.operators.deltas import (
-        maybe_compact_deltas,
-        recover_delta_compaction,
-    )
-
-    root = str(tmp_path / "log")
-    _mk_deltas(spark, root)
-    want = _rows(spark, root)
-    flaky.fail_at(step, after)
-    with pytest.raises(InjectedCrash):
-        maybe_compact_deltas(spark, root, max_deltas=1)
-    recover_delta_compaction(root)
-    names = sorted(d for d in os.listdir(root) if d.startswith("delta="))
-    assert names == ["delta=-1"]  # phase C replayed to completion
-    assert _rows(spark, root) == want  # rows exact — never partial
-    assert not os.path.exists(f"{root}/.compact")
+def _mk_stage(spark, root):
+    for i in range(3):
+        spark.range(4).withColumn("b", F.lit(i)).write.parquet(
+            f"{root}/delta={i}"
+        )
 
 
-def test_delta_compaction_pre_commit_marker_strand(spark, tmp_path, flaky):
-    """A crash that strands the COMMIT temp (marker never published)
-    is pre-commit garbage: the live deltas are untouched and the next
-    attempt completes."""
-    from dask_datapipeline_spark.operators.deltas import maybe_compact_deltas
-
-    root = str(tmp_path / "log")
-    _mk_deltas(spark, root)
-    want = _rows(spark, root)
-    flaky.fail_at("marker.staged")
-    with pytest.raises(InjectedCrash):
-        maybe_compact_deltas(spark, root, max_deltas=1)
-    names = sorted(d for d in os.listdir(root) if d.startswith("delta="))
-    assert names == ["delta=0", "delta=1", "delta=2"]  # live state intact
-    assert maybe_compact_deltas(spark, root, max_deltas=1)
-    assert _rows(spark, root) == want
-    # the stranded temp was swept by the attempt's recover
-    assert not any(".tmp-" in n for n in os.listdir(root))
-
-
-# ----- bm25 paired compaction ----------------------------------------------
-
-
-@pytest.mark.parametrize("after", [0, 1, 2, 3])
-def test_bm25_compaction_heals_mid_rename_any_boundary(
-    spark, tmp_path, flaky, after
-):
-    """The bm25 fold moves TWO dirs (postings, stats): crash at every
-    move boundary — including between the two subs — and replay; the
-    probe-visible rows are exact afterwards."""
-    from dask_datapipeline_spark.operators.bm25 import (
-        maybe_compact_bm25_index,
-        recover_bm25_compaction,
-    )
-
-    base = str(tmp_path / "bm25")
+def _mk_bm25(spark, root):
     for i in range(3):
         spark.createDataFrame(
             [(f"tok{j}", 100 * i + j, 5, 1) for j in range(4)],
             "token string, doc_id long, dl long, tf long",
-        ).write.parquet(f"{base}/postings/delta={i}")
+        ).write.parquet(f"{root}/postings/delta={i}")
         spark.createDataFrame(
             [(4, 20)], "n_docs long, sum_dl long"
-        ).write.parquet(f"{base}/stats/delta={i}")
-    want_p = _rows(spark, f"{base}/postings")
-    flaky.fail_at("move.staged", after % 2)
-    if after >= 2:  # partial-copy variants
-        flaky.fail_at("move.copy", after - 2)
+        ).write.parquet(f"{root}/stats/delta={i}")
+
+
+def _mk_ivf(spark, root):
+    for i in range(3):
+        spark.createDataFrame(
+            [
+                (10 * i + j, [float(j % 2), float(j // 2), 1.0, float(i)], j % 2)
+                for j in range(4)
+            ],
+            "vec_id long, embedding array<float>, __cell long",
+        ).write.partitionBy("__cell").parquet(f"{root}/vectors/delta={i}")
+    spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "cell_id long, centroid array<double>",
+    ).coalesce(1).write.parquet(f"{root}/codebook")
+    meta = {
+        "id_col": "vec_id", "vec_col": "embedding", "n_cells": 2,
+        "trained": False, "dim": 4,
+    }
+    with open(f"{root}/_META", "w") as f:
+        json.dump(meta, f)
+
+
+def _client(name):
+    """(build, compact, recover, log dirs, extra state) of a client."""
+    from dask_datapipeline_spark.operators import bm25, deltas, ivf_index
+
+    return {
+        "stage": (
+            _mk_stage,
+            lambda spark, r: deltas.maybe_compact_deltas(spark, r, max_deltas=1),
+            deltas.recover_delta_compaction,
+            [""],
+            [],
+        ),
+        "bm25": (
+            _mk_bm25,
+            lambda spark, r: bm25.maybe_compact_bm25_index(spark, r, max_deltas=1),
+            bm25.recover_bm25_compaction,
+            ["postings", "stats"],
+            [],
+        ),
+        "ivf": (
+            _mk_ivf,
+            lambda spark, r: ivf_index.maybe_compact_ivf_index(
+                spark, r, max_deltas=1
+            ),
+            ivf_index.recover_ivf_compaction,
+            ["vectors"],
+            ["codebook", "_META"],
+        ),
+        # the retrain commit also swaps the codebook and rewrites _META
+        "ivf-retrain": (
+            _mk_ivf,
+            lambda spark, r: ivf_index.compact_ivf_index(spark, r, retrain=True),
+            ivf_index.recover_ivf_compaction,
+            ["vectors"],
+            ["codebook", "_META"],
+        ),
+    }[name]
+
+
+def _state(spark, root, logs, extras):
+    """Everything a reader of the index can observe."""
+    out = {}
+    for sub in logs:
+        d = os.path.join(root, sub)
+        names = sorted(n for n in os.listdir(d) if n.startswith("delta="))
+        out[sub] = (names, _rows(spark, d))
+    for name in extras:
+        path = os.path.join(root, name)
+        if os.path.isdir(path):
+            out[name] = _rows(spark, path)
+        else:
+            with open(path) as f:
+                out[name] = json.load(f)
+    return out
+
+
+# (client, step, after, committed): committed = the crash lands past
+# the COMMIT marker, so recovery must complete the fold
+_MATRIX = [
+    (client, step, after, committed)
+    for client in ("stage", "bm25", "ivf")
+    for step, after, committed in [
+        ("marker.staged", 0, False),  # COMMIT temp stranded, never published
+        ("move.copy", 0, True),  # dst created but EMPTY
+        ("move.copy", 1, True),  # strict prefix of entries copied (partial dst)
+        ("move.staged", 0, True),  # copy complete, source delete pending
+    ]
+] + [
+    ("bm25", "move.staged", 1, True),  # between the postings and stats moves
+    # the retrain hook runs first in phase C: codebook, _META, vectors
+    ("ivf-retrain", "move.copy", 1, True),  # partial codebook copy
+    ("ivf-retrain", "move.staged", 1, True),  # codebook in, vectors pending
+    ("ivf-retrain", "marker.staged", 1, True),  # mid _META rewrite
+]
+
+
+@pytest.fixture(scope="module")
+def _reference():
+    """client -> (pre-compaction state, uncrashed post-commit state),
+    computed once per client (the builds are deterministic)."""
+    return {}
+
+
+@pytest.mark.parametrize("client,step,after,committed", _MATRIX)
+def test_delta_log_crash_matrix(
+    spark, tmp_path, flaky, _reference, client, step, after, committed
+):
+    """Every delta-log client under object-store rename semantics: a
+    crash anywhere in the commit either leaves the live logs exactly
+    as they were (pre-commit; the next attempt completes) or recovery
+    replays phase C to the exact state of an uncrashed compaction."""
+    build, compact, recover, logs, extras = _client(client)
+    root = str(tmp_path / "log")
+    build(spark, root)
+    if client not in _reference:
+        ref = str(tmp_path / "ref")
+        shutil.copytree(root, ref)
+        before = _state(spark, ref, logs, extras)
+        assert compact(spark, ref)
+        _reference[client] = (before, _state(spark, ref, logs, extras))
+    before, want = _reference[client]
+    assert all(want[sub][0] == ["delta=-1"] for sub in logs)
+
+    flaky.fail_at(step, after)
     with pytest.raises(InjectedCrash):
-        maybe_compact_bm25_index(spark, base, max_deltas=1)
-    recover_bm25_compaction(base)
-    assert sorted(os.listdir(f"{base}/postings")) == ["delta=-1"]
-    assert sorted(os.listdir(f"{base}/stats")) == ["delta=-1"]
-    assert _rows(spark, f"{base}/postings") == want_p
-    st = spark.read.parquet(f"{base}/stats").select("n_docs", "sum_dl")
-    assert [tuple(r) for r in st.collect()] == [(12, 60)]
+        compact(spark, root)
+    if committed:
+        recover(root)
+    else:
+        assert _state(spark, root, logs, extras) == before  # live state intact
+        assert compact(spark, root)
+    assert _state(spark, root, logs, extras) == want  # never partial
+    assert not os.path.exists(f"{root}/.compact")
+    # stranded marker temps were swept by the recovery
+    assert not any(
+        ".tmp-" in n for _, _, files in os.walk(root) for n in files
+    )
 
 
 # ----- snapshot swap (the sketch-sink state dir) ----------------------------
@@ -204,7 +271,6 @@ def test_snapshot_unrecoverable_state_is_loud(tmp_path, flaky):
     snap = _Snapshot(base, "matrix")
     with open(base + ".swap", "w") as f:
         f.write(json.dumps({"phase": 1, "old": "snap.old-dead", "staging": "snap.stage-x"}))
-    import shutil
 
     shutil.rmtree(base)
     with pytest.raises(ValueError, match="unrecoverable"):

@@ -455,8 +455,8 @@ def test_incremental_compaction_crash_recovery(spark, emb, tmp_path):
     import os as _os
     import shutil as _shutil
 
+    from dask_datapipeline_spark.operators.deltas import _workdir
     from dask_datapipeline_spark.operators.ivf_index import (
-        _ivf_workdir,
         append_to_ivf_index,
         maybe_compact_ivf_index,
         recover_ivf_compaction,
@@ -476,7 +476,7 @@ def test_incremental_compaction_crash_recovery(spark, emb, tmp_path):
     want = sorted(map(tuple, ivf_topk_from_index(spark, idx, queries, k=K, n_probe=N_PROBE).collect()))
 
     # crash BEFORE commit: pre-commit garbage dropped, index untouched
-    work = _ivf_workdir(idx)
+    work = _workdir(idx)
     _os.makedirs(_os.path.join(work, "vectors"), exist_ok=True)
     recover_ivf_compaction(idx)
     assert not _os.path.isdir(work)

@@ -921,45 +921,6 @@ def test_streaming_bm25_deltas_match_batch_index(spark, tmp_path):
     assert [tuple(r) for r in replayed] == [tuple(r) for r in bat]
 
 
-def test_compact_bm25_index_is_transparent(spark, tmp_path):
-    """Compacting the delta-built index into the one-shot layout
-    changes bytes on disk, never scores."""
-    import os
-
-    from dask_datapipeline_spark.operators.bm25 import (
-        bm25_topk_from_index,
-        compact_bm25_index,
-        postings_frames,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta {'dup ' * (i % 4)}gamma {i}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    inc = str(tmp_path / "inc")
-    for b in range(4):  # simulate four delta batches
-        p, s = postings_frames(docs.where(F.col("doc_id") % 4 == b))
-        p.write.mode("overwrite").parquet(f"{inc}/postings/delta={b}")
-        s.write.mode("overwrite").parquet(f"{inc}/stats/delta={b}")
-    comp = str(tmp_path / "comp")
-    compact_bm25_index(spark, inc, comp)
-    assert not any(
-        d.startswith("delta=") for d in os.listdir(comp + "/postings")
-    )
-    terms = ["dup", "alpha"]
-    a = bm25_topk_from_index(spark, inc, terms, k=8).collect()
-    b = bm25_topk_from_index(spark, comp, terms, k=8).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # in-place compaction would truncate the live postings mid-read —
-    # both identity and nesting must be rejected before any write
-    with pytest.raises(ValueError, match="nest under"):
-        compact_bm25_index(spark, inc, inc)
-    with pytest.raises(ValueError, match="nest under"):
-        compact_bm25_index(spark, inc, inc + "/compacted")
-    # a SIBLING whose name shares the prefix is fine
-    compact_bm25_index(spark, inc, inc + "_v2")
-
-
 def test_streaming_bm25_adopts_batch_built_index(spark, tmp_path):
     """build_bm25_index then stream MORE docs into the same dir: the
     flat layout is adopted as delta=-1 and the final index scores

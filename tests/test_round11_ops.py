@@ -166,6 +166,7 @@ def test_bm25_compaction_crash_recovery_both_phases(spark, tmp_path, monkeypatch
     import os
 
     import dask_datapipeline_spark.operators.bm25 as bm25
+    import dask_datapipeline_spark.operators.deltas as deltas
 
     idx = _delta_index(spark, tmp_path, n_batches=4)
     terms = ["dup", "gamma"]
@@ -182,15 +183,15 @@ def test_bm25_compaction_crash_recovery_both_phases(spark, tmp_path, monkeypatch
 
     # crash AFTER the commit marker (phases A+B done, C never ran):
     # recovery must FINISH the compaction, scores bit-identical
-    real_finish = bm25._finish_compaction
+    real_finish = deltas._finish
 
     def boom(fs, index_dir):
         raise RuntimeError("simulated crash between commit and finish")
 
-    monkeypatch.setattr(bm25, "_finish_compaction", boom)
+    monkeypatch.setattr(deltas, "_finish", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         bm25.maybe_compact_bm25_index(spark, idx, max_deltas=2)
-    monkeypatch.setattr(bm25, "_finish_compaction", real_finish)
+    monkeypatch.setattr(deltas, "_finish", real_finish)
     assert os.path.isfile(idx + "/.compact/COMMIT")  # past the commit point
     bm25.recover_bm25_compaction(idx)
     assert os.listdir(idx + "/postings") == ["delta=-1"]

@@ -432,7 +432,7 @@ def test_stream_incremental_quantile_restart_resumes_and_merges_exactly(
 def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     spark, tmp_path
 ):
-    """compact_every folds increments mid-stream: flags are identical
+    """compact_max_inc folds increments mid-stream: flags are identical
     to an uncompacted run, later batches still dedup against
     earlier-ingested docs THROUGH the compacted base, and the manifest
     increment list stays bounded."""
@@ -451,13 +451,16 @@ def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     batches = [
         [(1, "alpha beta gamma delta epsilon zeta"),
          (3, "red orange yellow green blue indigo")],
-        # doc 5 duplicates doc 3 — only reachable via the (compacted)
-        # increment from batch 0
-        [(5, "red orange yellow green blue indigo")],
-        [(7, "completely novel text nothing shared here at all")],
+        [(5, "completely novel text nothing shared here at all")],
+        # with compact_max_inc=1 batch 2 folds the committed b0/b1
+        # increments into the base (b2 itself is in flight)
+        [(7, "another unrelated line of words for the filler")],
+        # doc 9 duplicates doc 3 — only reachable via the base that
+        # absorbed batch 0's increment
+        [(9, "red orange yellow green blue indigo")],
     ]
 
-    def run(root, compact_every):
+    def run(root, compact_max_inc):
         work = str(tmp_path / root)
         os.makedirs(work)
         corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
@@ -482,7 +485,7 @@ def test_stream_incremental_dedup_with_compaction_is_flag_identical(
         stream_incremental_dedup(
             spark, staged, index_path, out,
             checkpoint_dir=os.path.join(work, "ckpt"),
-            compact_every=compact_every,
+            compact_max_inc=compact_max_inc,
         )
         flags = {
             r.doc_id: (r.dup_of, r.is_new)
@@ -494,11 +497,12 @@ def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     plain_flags, plain_cur = run("plain", None)
     comp_flags, comp_cur = run("compacted", 1)
     assert comp_flags == plain_flags
-    assert comp_flags[5] == (3, False)  # found via the compacted base
-    # every COMMITTED batch folded; the final batch's tag stays live —
-    # the replay watermark (keep_from) never folds the in-flight batch,
-    # whose append idempotency a post-crash replay depends on
-    assert comp_cur["inc"] == [f"b{len(batches) - 1:05d}"]
+    assert comp_flags[9] == (3, False)  # found via the compacted base
+    # committed increments past the threshold were folded; at most
+    # compact_max_inc committed tags stay live beside the final batch's
+    # — the replay watermark (keep_from) never folds the in-flight
+    # batch, whose append idempotency a post-crash replay depends on
+    assert comp_cur["inc"] == ["b00002", "b00003"]
     assert len(plain_cur["inc"]) == len(batches)
 
 
